@@ -48,27 +48,11 @@ import org.apache.spark.sql.SparkSession
   * counts the entries the extra rep actually improved) — the recorded
   * artifact converges to the quiet number instead of depending on
   * machine luck.
+  *
+  * A query with a rep that throws is never timed: it adds nothing to
+  * the totals and is named in the total line's `failed` list.
   */
 object Bench {
-  /** Per-query shuffle accounting (round 9): an async listener sums
-    * stage-level shuffle read/write bytes; the bench snapshots the
-    * totals around each query's FIRST rep (after draining the
-    * listener bus) and persists the deltas to `bench_shuffle.json` —
-    * the "is this plan shuffle-shaped the way SURVEY promises"
-    * evidence, measured rather than asserted. Plan-only; stdout
-    * contract unchanged. */
-  private class ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-    val write = new java.util.concurrent.atomic.AtomicLong(0L)
-    val read = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-  }
   /** A first rep at or below this is accepted as-is: contention only
     * inflates timings, so a small observation is already a tight upper
     * bound on the quiet cost, and the worst-case total error from
@@ -113,21 +97,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // UTC pin: Tables.t's NTZ→TIMESTAMP normalization must be a pure
-      // reinterpretation (same µs count) regardless of host TZ.
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) in some corpus builds;
-      // session-wide legacy flag (inherited by newSession clones)
-      // instead of a conf.set in the read path — see Tables.t.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus, extensions = true)
     // Untimed warmup: touch every table and exercise one small
     // aggregation so file-index builds, codegen compilation and JIT
     // warmup don't land on whichever query happens to run first.
@@ -150,36 +120,43 @@ object Bench {
     // sentinel_post (measured 0.19 vs 0.09 s) and fake a "contention
     // cleared mid-run" signature on a quiet machine
     sentinel(spark)
-    def rep(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
+    // queries with a rep that threw: they get no timing at all, so a
+    // query that fails early can never bench as a fast one
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def rep(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // Bench hygiene (round-1 judge flag): release every registry
       // persist after each rep so cached storage never accumulates
       // across unrelated timings (and rep 2 can't reuse rep 1's
       // persisted intermediates).
       graft.ops.OpCache.clear(spark)
-      dt
+      if (ok) Some(dt) else None
     }
-    val meter = new ShuffleMeter
-    spark.sparkContext.addSparkListener(meter)
+    // per-query FIRST-REP shuffle bytes, persisted to bench_shuffle.json
+    // — the "is this plan shuffle-shaped the way SURVEY promises"
+    // evidence, measured rather than asserted
+    val meter = new org.apache.spark.graft.QueryMeter(spark.sparkContext)
     val shuffles =
       scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-    def drained(): (Long, Long) = {
-      org.apache.spark.graft.ListenerFlush.drain(spark.sparkContext)
-      (meter.write.get(), meter.read.get())
-    }
     val sentinels = scala.collection.mutable.ArrayBuffer(sentinel(spark))
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .zipWithIndex
-      .map { case ((name, fn), idx) =>
+      .flatMap { case ((name, fn), idx) =>
         if (idx > 0 && idx % SentinelEvery == 0) sentinels += sentinel(spark)
-        val (w0, r0) = drained()
-        var times = Vector(rep(fn))
-        val (w1, r1) = drained()
-        shuffles(name) = (w1 - w0, r1 - r0)
+        val before = meter.snap()
+        var times = rep(name, fn).toVector
+        val d = meter.snap() - before
+        shuffles(name) = (d.shuffleWrite, d.shuffleRead)
         // Early exit: (a) tiny first rep is already un-inflated;
         // (b) best two agree within AgreeFactor — the min has
         // stabilized (rep 1 carries the query's own compile, see
@@ -191,8 +168,10 @@ object Bench {
             s.length >= 2 && (s(1) <= s(0) * AgreeFactor ||
               s(0) < ThirdRepFloor)
           }
-        while (times.length < reps && !settled) times :+= rep(fn)
-        (name, fn, times.min, idx / SentinelEvery)
+        while (!failed(name) && times.length < reps && !settled)
+          times ++= rep(name, fn)
+        if (failed(name)) None
+        else Some((name, fn, times.min, idx / SentinelEvery))
       }
     // the probe closing the sweep's LAST block runs BEFORE the recheck
     // interlude (r10 ADVICE): measured after it, the block's bound
@@ -200,8 +179,10 @@ object Bench {
     sentinels += sentinel(spark)
     // end-of-run re-measure of the most expensive entries (see object
     // doc): one rep each, min() repairs window-inflated tails
-    val recheck = firstPass.sortBy(-_._3).take(RecheckTop)
-      .map { case (name, fn, _, _) => name -> rep(fn) }.toMap
+    val top = firstPass.sortBy(-_._3).take(RecheckTop)
+    val rechecked = top.map(_._1).toSet
+    val recheck = top
+      .flatMap { case (name, fn, _, _) => rep(name, fn).map(name -> _) }.toMap
     // Sentinel-triggered SELF-HEAL (round 10): block b of the sweep ran
     // between probes sentinels(b) and sentinels(b+1) (the probe above
     // closes the last block). If either bounding probe sat above
@@ -214,14 +195,16 @@ object Bench {
     val healReps = firstPass
       .filter { case (name, _, t, b) =>
         (probe(b) > QuietBand || probe(b + 1) > QuietBand) &&
-          t > FastCutoff && !recheck.contains(name)
+          t > FastCutoff && !rechecked(name) && !failed(name)
       }
-      .map { case (name, fn, _, _) => name -> rep(fn) }.toMap
-    val healedNames = firstPass.collect {
+      .flatMap { case (name, fn, _, _) => rep(name, fn).map(name -> _) }.toMap
+    if (healReps.nonEmpty) sentinels += sentinel(spark)
+    // a query whose recheck or heal rep threw is failed too
+    val timed = firstPass.filterNot(q => failed(q._1))
+    val healedNames = timed.collect {
       case (name, _, t, _) if healReps.get(name).exists(_ < t) => name
     }
-    if (healReps.nonEmpty) sentinels += sentinel(spark)
-    val results = firstPass.map { case (name, _, t, _) =>
+    val results = timed.map { case (name, _, t, _) =>
       name -> math.min(math.min(t, recheck.getOrElse(name, t)),
         healReps.getOrElse(name, t))
     }
@@ -229,43 +212,38 @@ object Bench {
     // item 7): the artifact shows both what the sweep measured and what
     // the recheck/heal reps repaired, so a reader can bound how much of
     // the delta was machine noise without re-running anything
-    val firstPassTotal = firstPass.map(_._3).sum
+    val firstPassTotal = timed.map(_._3).sum
     val (mapLine, totalLine) = renderLines(results, sfDir,
-      sentinels.toSeq, healedNames.length, firstPassTotal)
+      sentinels.toSeq, healedNames.length, firstPassTotal, failed.toSeq)
     println(mapLine)
     println(totalLine)
+    def persist(what: String, env: String, default: String,
+        text: String): Unit =
+      try java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(sys.env.getOrElse(env, default)), text)
+      catch { case e: Exception =>
+        System.err.println(s"[bench] $what persist failed: $e")
+      }
     // Persist the FULL per-query map next to the repo artifacts: the
     // driver's tail-capture keeps only ~2000 chars of stdout, so
     // BENCH_r{N}.json preserves per-query timings for just the
     // alphabetical tail (~72/275 in round 7) — this file makes every
     // query's r{N}→r{N+1} delta diffable from artifacts alone
     // (round-7 verdict item 3).
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "bench_per_query.json")),
+    persist("per-query", "SPARK_GRAFT_BENCH_OUT", "bench_per_query.json",
       mapLine + "\n" + totalLine + "\n")
-    catch { case e: Exception =>
-      System.err.println(s"[bench] per-query persist failed: $e")
-    }
     // the compact total ALSO lands in its own file (r15 verdict item 2):
     // stdout now arrives raw (build.sbt outputStrategy), but a file the
     // driver/judge can read without any stdout parsing is the sturdier
     // half of the contract — BENCH_r13..r15 all carried "parsed": null
     // because the total line hid behind sbt's logger prefix
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_TOTAL_OUT", "bench_total.json")),
+    persist("total", "SPARK_GRAFT_TOTAL_OUT", "bench_total.json",
       totalLine + "\n")
-    catch { case e: Exception =>
-      System.err.println(s"[bench] total persist failed: $e")
-    }
-    // per-query FIRST-REP shuffle bytes (see ShuffleMeter) — a
-    // separate artifact so the driver-parsed lines above stay stable
-    // query entries nest under "queries" (r10 ADVICE): the note is
-    // metadata, not a query, and consumers iterate the map directly
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_SHUFFLE_OUT", "bench_shuffle.json")),
+    // per-query FIRST-REP shuffle bytes (see QueryMeter) — a separate
+    // artifact so the machine-parsed lines above stay stable. Query
+    // entries nest under "queries": the note is metadata, not a query,
+    // and consumers iterate the map directly
+    persist("shuffle", "SPARK_GRAFT_SHUFFLE_OUT", "bench_shuffle.json",
       """{"_note":"deltas bracket each query's FIRST rep; a query """ +
         """that is first to touch a shared OpCache artifact (copurchase """ +
         """pairs, binhash, rfmseg_base) carries that build's shuffle """ +
@@ -273,9 +251,6 @@ object Bench {
         shuffles.map { case (n, (w, r)) =>
           s""""$n":{"shuffle_write_bytes":$w,"shuffle_read_bytes":$r}"""
         }.mkString("{", ",", "}") + "}\n")
-    catch { case e: Exception =>
-      System.err.println(s"[bench] shuffle persist failed: $e")
-    }
     spark.stop()
   }
 
@@ -302,10 +277,12 @@ object Bench {
     * The sentinel evidence rides on the total line so it survives even
     * the harshest tail truncation: pre/post endpoints plus the MAX over
     * all checkpoints (a mid-run window shows up in the max even when
-    * both endpoints look quiet). */
+    * both endpoints look quiet). `results` holds only the timed
+    * queries; the ones that threw are named in `failed`. */
   def renderLines(results: Seq[(String, Double)], sfDir: String,
       sentinels: Seq[Double] = Nil, healed: Int = 0,
-      firstPassTotal: Double = -1.0): (String, String) = {
+      firstPassTotal: Double = -1.0,
+      failed: Seq[String] = Nil): (String, String) = {
     // Locale.ROOT: the default-locale f"%.3f" renders a COMMA decimal
     // separator on e.g. de_DE JVMs — malformed JSON
     def d3(v: Double): String =
@@ -320,12 +297,15 @@ object Bench {
     // (round-8 verdict item 7).
     val fpTotal = if (firstPassTotal >= 0) firstPassTotal
       else results.map(_._2).sum
+    val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     (s"""{"queries":$qs,"sf":"$sfDir"}""",
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
         s""""n_queries":${results.length},""" +
         s""""value_first_pass":${d3(fpTotal)},""" +
         s""""per_query_file":"bench_per_query.json",""" +
         s""""sentinel_pre":${d3(s.head)},"sentinel_post":${d3(s.last)},""" +
-        s""""sentinel_max":${d3(s.max)},"healed":$healed}""")
+        s""""sentinel_max":${d3(s.max)},"healed":$healed,""" +
+        s""""n_failed":${failed.length},""" +
+        s""""failed":$failedNames}""")
   }
 }

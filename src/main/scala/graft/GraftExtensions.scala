@@ -3,76 +3,82 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkStrategy
 import graft.functions.{CosineSimF, DotProductF, ShingleGen,
   SortedIntersectCountF}
+import graft.plans.{AsOfJoinStrategy, BandJoinStrategy, DotProductRewrite,
+  GraftMergeStrategy, SessionizeStrategy}
 
 /** SparkSessionExtensions entry point: makes the engine's native
   * expressions available to SQL. Activate with
   * `spark.sql.extensions=graft.GraftExtensions` (cluster-wide, no code
   * changes for users), or imperatively via
   * `org.apache.spark.sql.graft.GraftFunctions.register(spark)` for an
-  * already-built session.
+  * already-built session. Both read the one declaration of the surface
+  * in the companion object.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // arity checked here: a bad call must fail resolution with a clear
-    // message, not an IndexOutOfBoundsException from exprs(1)
-    def binary(name: String, make: (Expression, Expression) => Expression)
-        : Seq[Expression] => Expression = {
-      case Seq(a, b) => make(a, b)
-      case other => throw new IllegalArgumentException(
-        s"$name requires exactly 2 arguments, got ${other.length}")
+    import GraftExtensions._
+    functions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls, name), build))
     }
-    ext.injectFunction((
-      FunctionIdentifier("dot_product_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, "dot_product_f"),
-      binary("dot_product_f", DotProductF(_, _))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim_f"),
-      new ExpressionInfo(classOf[CosineSimF].getName, "cosine_sim_f"),
-      binary("cosine_sim_f", CosineSimF(_, _))))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_gen"),
-      new ExpressionInfo(classOf[ShingleGen].getName, "shingle_gen"),
-      GraftExtensions.shingleGenBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count_f"),
-      new ExpressionInfo(classOf[SortedIntersectCountF].getName,
-        "sorted_intersect_count_f"),
-      binary("sorted_intersect_count_f", SortedIntersectCountF(_, _))))
-    // SQL TABLE functions over the versioned-table layer: pure-SQL
-    // users get snapshot reads, time travel, and the row-level change
-    // feed without touching the Scala API —
-    //   SELECT * FROM graft_table('/path/to/table')
-    //   SELECT * FROM graft_table('/path/to/table', 3)      -- version
-    //   SELECT * FROM graft_table_changes('/path', 1, 3)    -- feed
-    // Arguments must be literals (they determine the PLAN — the file
-    // list is resolved at analysis time, like every table reference).
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_table"),
-      new ExpressionInfo("graft.sources.VersionedTable", "graft_table"),
-      GraftExtensions.graftTableBuilder))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_table_changes"),
-      new ExpressionInfo("graft.sources.VersionedTable",
-        "graft_table_changes"),
-      GraftExtensions.graftTableChangesBuilder))
-    ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.SessionizeStrategy)
-    ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
-    // SQL MERGE INTO over the named catalog (round 15): claims the
-    // resolved command for graft tables before the built-in planner
-    // rejects it — see graft.plans.GraftMergeStrategy
-    ext.injectPlannerStrategy(_ => graft.plans.GraftMergeStrategy)
+    tableFunctions.foreach { case (name, build) =>
+      ext.injectTableFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.sources.VersionedTable", name), build))
+    }
+    // declarative path only: the rule rewrites composed HOF dot
+    // products session-wide, so GraftFunctions.register never adds it
+    ext.injectOptimizerRule(_ => DotProductRewrite)
+    strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
   }
 }
 
 object GraftExtensions {
-  /** Shared by the extensions path and GraftFunctions.register: the
-    * shingle size must be a foldable integer (it is part of the plan,
-    * not a per-row value). */
-  val shingleGenBuilder: Seq[Expression] => Expression = {
+  /** Scalar SQL functions: (name, implementing class, builder). */
+  val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("dot_product_f", classOf[DotProductF].getName,
+      binary("dot_product_f", DotProductF(_, _))),
+    ("cosine_sim_f", classOf[CosineSimF].getName,
+      binary("cosine_sim_f", CosineSimF(_, _))),
+    ("shingle_gen", classOf[ShingleGen].getName, shingleGenBuilder),
+    ("sorted_intersect_count_f", classOf[SortedIntersectCountF].getName,
+      binary("sorted_intersect_count_f", SortedIntersectCountF(_, _))))
+
+  /** SQL TABLE functions over the versioned-table layer: pure-SQL
+    * users get snapshot reads, time travel, and the row-level change
+    * feed without touching the Scala API —
+    *   SELECT * FROM graft_table('/path/to/table')
+    *   SELECT * FROM graft_table('/path/to/table', 3)      -- version
+    *   SELECT * FROM graft_table_changes('/path', 1, 3)    -- feed
+    * Arguments must be literals (they determine the PLAN — the file
+    * list is resolved at analysis time, like every table reference). */
+  val tableFunctions: Seq[(String, Seq[Expression] => LogicalPlan)] = Seq(
+    "graft_table" -> graftTableBuilder,
+    "graft_table_changes" -> graftTableChangesBuilder)
+
+  /** Planner strategies for the native operators, plus SQL MERGE INTO
+    * over the named catalog (GraftMergeStrategy claims the resolved
+    * command for graft tables before the built-in planner rejects it).
+    * Each matches only its own logical node. */
+  val strategies: Seq[SparkStrategy] = Seq(AsOfJoinStrategy,
+    SessionizeStrategy, BandJoinStrategy, GraftMergeStrategy)
+
+  /** Arity checked here: a bad call must fail resolution with a clear
+    * message, not an IndexOutOfBoundsException from exprs(1). */
+  private def binary(name: String,
+      make: (Expression, Expression) => Expression)
+      : Seq[Expression] => Expression = {
+    case Seq(a, b) => make(a, b)
+    case other => throw new IllegalArgumentException(
+      s"$name requires exactly 2 arguments, got ${other.length}")
+  }
+
+  /** The shingle size must be a foldable integer (it is part of the
+    * plan, not a per-row value). */
+  private def shingleGenBuilder: Seq[Expression] => Expression = {
     case Seq(a, kExpr) if kExpr.foldable && kExpr.eval() != null =>
       ShingleGen(a, kExpr.eval().asInstanceOf[Number].intValue())
     case _ => throw new IllegalArgumentException(
@@ -85,9 +91,6 @@ object GraftExtensions {
     e.eval()
   }
 
-  private def str(e: Expression, what: String): String =
-    lit(e, what).toString
-
   private def int(e: Expression, what: String): Int =
     lit(e, what).asInstanceOf[Number].intValue()
 
@@ -96,15 +99,11 @@ object GraftExtensions {
   /** `graft_table(root[, version])` — the analyzed read plan is
     * embedded directly (the file list IS plan-time state, exactly like
     * a catalog table reference). */
-  val graftTableBuilder
-      : Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    case Seq(root) =>
-      graft.sources.VersionedTable
-        .read(active, str(root, "graft_table root"))
-        .queryExecution.analyzed
-    case Seq(root, v) =>
+  private def graftTableBuilder: Seq[Expression] => LogicalPlan = {
+    case Seq(root, version @ _*) if version.length <= 1 =>
       graft.sources.VersionedTable.read(active,
-        str(root, "graft_table root"), Some(int(v, "graft_table version")))
+        lit(root, "graft_table root").toString,
+        version.headOption.map(int(_, "graft_table version")))
         .queryExecution.analyzed
     case other => throw new IllegalArgumentException(
       s"graft_table requires (root[, version]), got ${other.length} args")
@@ -112,11 +111,10 @@ object GraftExtensions {
 
   /** `graft_table_changes(root, fromVersion, toVersion)` — the
     * row-level change feed as a SQL table. */
-  val graftTableChangesBuilder
-      : Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def graftTableChangesBuilder: Seq[Expression] => LogicalPlan = {
     case Seq(root, from, to) =>
       graft.sources.VersionedTable.readChangeFeed(active,
-        str(root, "graft_table_changes root"),
+        lit(root, "graft_table_changes root").toString,
         int(from, "fromVersion"), int(to, "toVersion"))
         .queryExecution.analyzed
     case other => throw new IllegalArgumentException(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark for the native codegen expressions vs their
@@ -14,13 +13,8 @@ import org.apache.spark.sql.functions._
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus, extensions = false)
     import spark.implicits._
 
     def timeMin(reps: Int)(f: => Unit): Double =
@@ -29,7 +23,7 @@ object MicroBench {
       }.min
 
     // ---- cosine: 2M rows × 64-dim float vectors -------------------
-    val vecs = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val vecs = spark.range(0, 2000000L, 1L, cpus)
       .select($"id",
         transform(sequence(lit(0), lit(63)),
           i => (pmod(hash($"id" * 64 + i), lit(1000)).cast("double")
@@ -52,7 +46,7 @@ object MicroBench {
     vecs.unpersist()
 
     // ---- sorted intersect count: 1M rows × ~64-element arrays -----
-    val arrs = spark.range(0, 1000000L, 1L, cpus.toInt)
+    val arrs = spark.range(0, 1000000L, 1L, cpus)
       .select($"id",
         sort_array(array_distinct(transform(sequence(lit(0), lit(63)),
           i => pmod(hash($"id" * 64 + i), lit(4096)).cast("long"))))
@@ -83,11 +77,11 @@ object MicroBench {
     import org.apache.spark.sql.graft.GraftFunctions
 
     // as-of: 2M left × 2M right over 10k keys
-    val aLeft = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val aLeft = spark.range(0, 2000000L, 1L, cpus)
       .select(($"id" % 10000).as("k"),
         pmod(hash($"id"), lit(1000000)).cast("long").as("lts"),
         $"id".as("lid")).persist()
-    val aRight = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val aRight = spark.range(0, 2000000L, 1L, cpus)
       .select(($"id" % 10000).as("k2"),
         pmod(hash($"id" + 7), lit(1000000)).cast("long").as("rts"),
         ($"id" % 997).as("rv")).persist()
@@ -111,7 +105,7 @@ object MicroBench {
     aLeft.unpersist(); aRight.unpersist()
 
     // sessionize: 4M rows over 50k keys
-    val sess = spark.range(0, 4000000L, 1L, cpus.toInt)
+    val sess = spark.range(0, 4000000L, 1L, cpus)
       .select(($"id" % 50000).as("k"),
         pmod(hash($"id"), lit(10000000)).cast("long").as("ts"),
         $"id".as("tie")).persist()
@@ -152,10 +146,10 @@ object MicroBench {
           $"rv" >= $"lv" * loF && $"rv" <= $"lv" * hiF)
         .agg(count(lit(1)))
     }
-    val bLeft = spark.range(0, 5000L, 1L, cpus.toInt)
+    val bLeft = spark.range(0, 5000L, 1L, cpus)
       .select((pmod(hash($"id"), lit(1000000)).cast("double")).as("lv"),
         $"id".as("lid")).persist()
-    val bRight = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val bRight = spark.range(0, 2000000L, 1L, cpus)
       .select((pmod(hash($"id" + 3), lit(1000000)).cast("double")).as("rv"),
         $"id".as("rid")).persist()
     bLeft.count(); bRight.count()
@@ -168,10 +162,10 @@ object MicroBench {
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     bLeft.unpersist(); bRight.unpersist()
 
-    val pLeft = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val pLeft = spark.range(0, 2000000L, 1L, cpus)
       .select((pmod(hash($"id"), lit(1000000)).cast("double")).as("lv"),
         $"id".as("lid")).persist()
-    val sRight = spark.range(0, 100000L, 1L, cpus.toInt)
+    val sRight = spark.range(0, 100000L, 1L, cpus)
       .select((pmod(hash($"id" + 3), lit(1000000)).cast("double")).as("rv"),
         $"id".as("rid")).persist()
     pLeft.count(); sRight.count()
@@ -195,10 +189,10 @@ object MicroBench {
     // composed explode+hash-join+filter vs the affine sweep.
     val delta = 500.0
     val abinW = 1000.0
-    val ivLeft = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val ivLeft = spark.range(0, 2000000L, 1L, cpus)
       .select((pmod(hash($"id"), lit(1000000000)).cast("double")).as("lv"),
         $"id".as("lid")).persist()
-    val ivRight = spark.range(0, 2000000L, 1L, cpus.toInt)
+    val ivRight = spark.range(0, 2000000L, 1L, cpus)
       .select((pmod(hash($"id" + 7), lit(1000000000)).cast("double"))
         .as("rv"), $"id".as("rid")).persist()
     ivLeft.count(); ivRight.count()

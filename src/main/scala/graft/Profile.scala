@@ -1,58 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicLong
 
-/** Dev profiling harness for the optimization rounds: time a set of
-  * registered queries under the Bench session settings and report,
-  * per query, the SECOND-rep wall time (warm codegen, cold OpCache —
-  * the same state Bench's min() converges to) together with the Spark
-  * job/stage/task counts and shuffle bytes of that rep. The counts
-  * are what the wall time at sf0.1 is mostly MADE OF (17 MB corpus:
-  * scheduling + codegen dominate data movement), so this is the
-  * "where does the time go" instrument guide §1 asks for.
+/** Dev profiling harness: for each named query, print a
+  * `=== <name> ===` separator, its formatted physical plan, and its
+  * SECOND-rep row — wall time (warm codegen, cold OpCache: the same
+  * state Bench's min() converges to) with the Spark job/stage/task
+  * counts and shuffle KB of that rep. The counts are what the wall
+  * time at sf0.1 is mostly MADE OF (17 MB corpus: scheduling + codegen
+  * dominate data movement). A wrapper can split the output on the
+  * separators into per-query plan files (the `plans/` artifacts).
   *
-  * Usage: runMain graft.Profile q_a,q_b[,...]   (or `top` = r14-slow set)
+  * Usage: runMain graft.Profile q_a,q_b[,...]   (or `top` = a fixed
+  * set of slow queries)
   */
 object Profile {
-  private class Meter extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new AtomicLong(0); val stages = new AtomicLong(0)
-    val tasks = new AtomicLong(0)
-    val shW = new AtomicLong(0); val shR = new AtomicLong(0)
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      tasks.addAndGet(sc.stageInfo.numTasks.toLong)
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def snap(): (Long, Long, Long, Long, Long) =
-      (jobs.get, stages.get, tasks.get, shW.get, shR.get)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus, extensions = true)
     Tables.all.foreach { t =>
       try Tables.t(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
+    val meter = new org.apache.spark.graft.QueryMeter(spark.sparkContext)
     val names: Seq[String] =
       if (args.isEmpty || args(0) == "top") Seq(
         "q_sim_hnsw_sweep", "q_sim_hnsw_topk", "q_sql_recursive",
@@ -64,30 +32,36 @@ object Profile {
         "q_dedup_near_jaccard", "q_graph_kcore", "q_dedup_containment",
         "q_sim_hnsw_saved", "q_scan_table_delete", "q_ml_confusion",
         "q_scan_table_history", "q_stream_tws_sessionize")
-      else args(0).split(",").map(_.trim).toSeq
-    val rows = names.map { name =>
+      else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    println(f"${"query"}%-26s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%6s " +
+      f"${"tasks"}%6s ${"shW_KB"}%8s ${"shR_KB"}%8s")
+    val secs = names.flatMap { name =>
       val fn = SparkEntry.queries(name)
+      println(s"=== $name ===")
       spark.sparkContext.setJobDescription(s"$name rep1")
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable => println(s"$name rep1 failed: $e") }
       graft.ops.OpCache.clear(spark)
-      org.apache.spark.graft.ListenerFlush.drain(spark.sparkContext)
       val pre = meter.snap()
       spark.sparkContext.setJobDescription(s"$name rep2")
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.OpCache.clear(spark)
-      org.apache.spark.graft.ListenerFlush.drain(spark.sparkContext)
-      val post = meter.snap()
-      (name, dt, post._1 - pre._1, post._2 - pre._2, post._3 - pre._3,
-        (post._4 - pre._4) / 1024, (post._5 - pre._5) / 1024)
+      try {
+        val df = fn(spark, sfDir)
+        df.count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        val d = meter.snap() - pre
+        df.explain("formatted")
+        println(f"$name%-26s $dt%7.2f ${d.jobs}%5d ${d.stages}%6d " +
+          f"${d.tasks}%6d ${d.shuffleWrite / 1024}%8d " +
+          f"${d.shuffleRead / 1024}%8d")
+        Some(dt)
+      } catch { case e: Throwable =>
+        println(s"$name rep2 failed: $e")
+        None
+      } finally graft.ops.OpCache.clear(spark)
     }
-    println(f"${"query"}%-26s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%6s " +
-      f"${"tasks"}%6s ${"shW_KB"}%8s ${"shR_KB"}%8s")
-    rows.foreach { case (n, t, j, st, ta, w, r) =>
-      println(f"$n%-26s $t%7.2f $j%5d $st%6d $ta%6d $w%8d $r%8d")
-    }
-    println(f"TOTAL ${rows.map(_._2).sum}%.2f s over ${rows.length} queries")
+    println(f"TOTAL ${secs.sum}%.2f s over ${secs.length} of " +
+      s"${names.length} queries")
     spark.stop()
   }
 }

@@ -1048,7 +1048,7 @@ object Dedup extends OpModule {
     // the five nprobe points are independent searches over the frozen
     // index — overlapped driver jobs (guide §2.6), results in input
     // order so the output is the exact sequential composition
-    val legRows = Par.map(Seq(1, 2, 4, 8, 16)) { np =>
+    val legRows = Par.map(s, Seq(1, 2, 4, 8, 16)) { np =>
       // ONE candidate materialization per point: the budget count
       // (round 13 — the equal-budget axis the graph-ANN laws compare
       // against) and the scoring both read the persisted frame
@@ -1161,16 +1161,6 @@ object Dedup extends OpModule {
   /** Out-degree of the NSW neighbor graph. */
   private val NswM = 8
 
-  /** Env-gated phase timer (dev-only): prints per-phase wall of the NSW
-    * build/walk when SPARK_GRAFT_NSW_DEBUG is set; zero cost otherwise. */
-  private val NswDbg = sys.env.contains("SPARK_GRAFT_NSW_DEBUG")
-  @inline private def nswPhase[T](tag: String)(f: => T): T =
-    if (!NswDbg) f else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"NSWDBG $tag%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** NSW NEIGHBOR GRAPH (round 13 — the HNSW family beside IVF/PQ/LSH,
     * r12 verdict item #8): each corpus vector keeps directed edges to
     * its [[NswM]] most-cosine-similar neighbors, found among nodes
@@ -1206,12 +1196,13 @@ object Dedup extends OpModule {
       // carry across bench reps)
       val vecs = corpus.select($"vec_id", $"embedding").persist()
       val p = corpus.sparkSession.sparkContext.defaultParallelism
-      // dedup+rank on ONE exchange (r16, guide §2.4): hash by src alone
-      // satisfies both the (src,dst) groupBy clustering and the src
-      // window partitioning, so the pair set crosses the wire once
-      // instead of twice (the former groupBy exchange + window exchange).
-      // min() over duplicates is grouping-invariant (identical sim4),
-      // and the row_number orderBy is a total order — bit-identical.
+      // dedup+rank: the plan has TWO exchanges — hashpartitioning(src,
+      // dst) for the groupBy-min (after a map-side partial min), then
+      // hashpartitioning(src) for the window (after a partial
+      // WindowGroupLimit). PlanSpec pins that count for the seed and
+      // every NN-descent round. min() over duplicates is
+      // grouping-invariant (identical sim4), and the row_number orderBy
+      // is a total order, so the kept edges are deterministic.
       def topM(scored: DataFrame): DataFrame = {
         val w = Window.partitionBy($"src").orderBy($"sim4".desc, $"dst".asc)
         scored.groupBy($"src", $"dst").agg(min($"sim4").as("sim4"))
@@ -1235,9 +1226,11 @@ object Dedup extends OpModule {
       // the 16-center distance fold per row on ONE task — and twice
       // over, once per self-join branch (two sequential ~1 s single-task
       // stages in the job trace). Spreading the corpus by vec_id FIRST
-      // puts the fold in the 2p-wide map stages of the branch exchanges
-      // (the identical repartition subtree is shared via exchange
-      // reuse, so the corpus shuffles once).
+      // puts the fold in the 2p-wide map stages of the branch exchanges.
+      // The corpus shuffles TWICE, once per branch: the src branch's
+      // join on `salt` infers an isnotnull(pmod(vec_id, salts)) filter
+      // below its repartition, so the two subtrees differ and the
+      // exchange is not reused (pinned in PlanSpec).
       val nodes = corpus
         .repartition(2 * p, $"vec_id")
         .select($"vec_id", $"embedding",
@@ -1267,7 +1260,7 @@ object Dedup extends OpModule {
         .select($"src", $"dst",
           round(graft.functions.CosineSimF.cosine($"se", $"de"), 4)
             .as("sim4"))
-      var g = nswPhase("build:seed")(topM(seedScored).localCheckpoint(true))
+      var g = topM(seedScored).localCheckpoint(true)
       // NN-DESCENT refinement (Dong et al.'s distributed k-NN-graph
       // recipe): per node v the round's candidate pool B(v) is its
       // out-neighbors plus its in-neighbors CAPPED at M (the reverse
@@ -1291,7 +1284,7 @@ object Dedup extends OpModule {
       // the same arrays — so the single groupBy-min dedups the union
       // exactly where the anti-join used to; the kept graph is
       // bit-identical (pinned by the saved-index equality law).
-      for (nnRound <- 1 to 3) {
+      for (_ <- 1 to 3) {
         val e = g
         val wIn = Window.partitionBy($"dst")
           .orderBy($"sim4".desc, $"src".asc)
@@ -1310,8 +1303,7 @@ object Dedup extends OpModule {
           .select($"src", $"dst",
             round(graft.functions.CosineSimF.cosine($"se", $"de"), 4)
               .as("sim4"))
-        g = nswPhase(s"build:nnd$nnRound")(topM(scored.unionByName(g))
-          .localCheckpoint(true))
+        g = topM(scored.unionByName(g)).localCheckpoint(true)
       }
       // g is eagerly checkpointed, so the build-scoped persist can go
       vecs.unpersist(blocking = false)
@@ -1382,7 +1374,7 @@ object Dedup extends OpModule {
     // it before a byte of data moves — measured); checkpointing
     // truncates lineage to O(1) per round, the same fixpoint recipe
     // as connectedComponents. Frames are O(visited) tiny.
-    var visited = nswPhase("walk:entry")(entry.localCheckpoint(true))
+    var visited = entry.localCheckpoint(true)
     // best-first, batched: each round EXPANDS the best beamWidth
     // visited-but-unexpanded nodes (the HNSW ef-search queue shape —
     // re-expanding the same stabilized beam would stall in a local
@@ -1391,7 +1383,7 @@ object Dedup extends OpModule {
     var expanded = visited.select($"probe_id", $"nbr_id").limit(0)
       .localCheckpoint(true)
     val roundPersists = Seq.newBuilder[DataFrame]
-    for (walkRound <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       // persist, not localCheckpoint (r15): toExpand is referenced
       // twice (candidate join this round, `expanded` anti-join in later
       // rounds) — the cache serves both without an eager job of its
@@ -1413,8 +1405,7 @@ object Dedup extends OpModule {
         .filter($"probe_id" =!= $"nbr_id")
         .join(visited.select($"probe_id", $"nbr_id"),
           Seq("probe_id", "nbr_id"), "left_anti")
-      val fresh = nswPhase(s"walk:round$walkRound")(
-        scoreOf(cand).localCheckpoint(true))
+      val fresh = scoreOf(cand).localCheckpoint(true)
       // the accumulators stay PLAIN unions of the checkpointed pieces:
       // a union of k LogicalRDDs is a linear plan however often it is
       // referenced, so only the per-round NEW frames need truncation
@@ -1594,7 +1585,7 @@ object Dedup extends OpModule {
     // frozen index — run them as overlapped driver jobs (guide §2.6);
     // Par.map keeps input order, so the output rows are the exact
     // sequential rows. nTruth rides leg 0 alongside the narrowest beam.
-    val legRows = Par.map(Seq(2, 4, 8)) { bw =>
+    val legRows = Par.map(s, Seq(2, 4, 8)) { bw =>
       val (visited, budget) =
         nswVisitedFrom(s, centers, corpus, graph, bw, rounds = 3)
       import org.apache.spark.sql.expressions.Window

@@ -144,7 +144,7 @@ object Embeddings extends OpModule {
       // 8-dim slices — overlapped driver jobs (guide §2.6); Par.map
       // keeps block order, each fit is seed-deterministic, so the
       // codebook array is bit-identical to the sequential build
-      Par.map((0 until 8).toSeq) { b =>
+      Par.map(s, (0 until 8).toSeq) { b =>
         val blk = e.select(
           org.apache.spark.ml.functions.array_to_vector(
             expr(s"slice(embedding, ${b * 8 + 1}, 8)")).as("features"))

@@ -1,5 +1,9 @@
 package graft.ops
 
+import java.util.concurrent.{Callable, ExecutionException,
+  ExecutorCompletionService, Executors}
+import org.apache.spark.sql.SparkSession
+
 /** Concurrent INDEPENDENT Spark actions from driver threads — the
   * optimization guide's §2.6 "overlap independent jobs" recipe, scoped
   * to multi-leg operators (recall sweeps, per-band model fits) whose
@@ -26,21 +30,35 @@ private[ops] object Par {
   private val MaxLegs = 4
 
   /** Map `f` over `xs` with up to [[MaxLegs]] legs in flight; results
-    * in input order; first failure rethrows after the pool drains. */
-  def map[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    * in input order. The legs run under one Spark job group: the first
+    * leg to fail cancels the other legs and every job of the group,
+    * then its exception is rethrown — a failing leg never waits behind
+    * slower ones, and no sibling job outlives the call. */
+  def map[A, B](s: SparkSession, xs: Seq[A])(f: A => B): Seq[B] = {
     if (xs.lengthCompare(1) <= 0) return xs.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(MaxLegs, xs.length))
+    val sc = s.sparkContext
+    val group = s"graft-par-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(math.min(MaxLegs, xs.length))
+    val done = new ExecutorCompletionService[B](pool)
     try {
-      val futures = xs.map(x => pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = f(x) }))
-      futures.map { fu =>
-        try fu.get()
-        catch { // unwrap so callers see the leg's own exception type
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+      val futures = xs.map(x => done.submit(new Callable[B] {
+        def call(): B = {
+          // the job description the caller's thread set is kept
+          sc.setJobGroup(group, sc.getLocalProperty("spark.job.description"),
+            interruptOnCancel = true)
+          f(x)
+        }
+      }))
+      for (_ <- xs.indices) {
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          sc.cancelJobGroupAndFutureJobs(group)
+          futures.foreach(_.cancel(true))
+          // unwrap so callers see the leg's own exception type
+          throw e.getCause
         }
       }
-    } finally pool.shutdown()
+      futures.map(_.get())
+    } finally pool.shutdownNow()
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -66,12 +67,18 @@ object Streaming extends OpModule {
     * lifetime). Results are partition-count invariant (asserted across
     * the suite's restarts; only layout changes). */
   private val StreamBytesPerPartition = 16L * 1024 * 1024
-  private def streamParts(s: SparkSession, dir: String): String =
+  private[ops] def streamParts(s: SparkSession, dir: String): String =
     s.conf.getOption("spark.graft.stream.statePartitions").getOrElse {
+      // the regular files under the source: a directory of part files
+      // is sized by its parts, not by its own directory entry (~4 KB)
       val bytes =
-        try java.nio.file.Files.size(
-          java.nio.file.Paths.get(dir, "events.parquet"))
-        catch { case _: Exception => 0L }
+        try {
+          import java.nio.file.{Files, Paths}
+          val walk = Files.walk(Paths.get(dir, "events.parquet"))
+          try walk.iterator().asScala.filter(Files.isRegularFile(_))
+            .map(Files.size).sum
+          finally walk.close()
+        } catch { case _: Exception => 0L }
       val want = (bytes + StreamBytesPerPartition - 1) /
         StreamBytesPerPartition
       math.max(2L, math.min(s.sparkContext.defaultParallelism.toLong,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.classic
-import graft.functions.{CosineSimF, DotProductF}
+import org.apache.spark.sql.execution.SparkStrategy
+import graft.GraftExtensions
 import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, BandJoinPlan,
   BandJoinStrategy, SessionizePlan, SessionizeStrategy}
 
@@ -13,44 +14,48 @@ import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy, BandJoinPlan,
   * Lives in the sql package for `sessionState` access.
   */
 object GraftFunctions {
+  /** Registers the functions, table functions and planner strategies
+    * that `GraftExtensions` declares — never its `DotProductRewrite`,
+    * which would rewrite composed HOF dot products session-wide. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product_f",
-      { case Seq(a, b) => DotProductF(a, b)
-        case other => throw new IllegalArgumentException(
-          s"dot_product_f requires exactly 2 arguments, got ${other.length}") },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_f",
-      { case Seq(a, b) => CosineSimF(a, b)
-        case other => throw new IllegalArgumentException(
-          s"cosine_sim_f requires exactly 2 arguments, got ${other.length}") },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_gen", graft.GraftExtensions.shingleGenBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count_f",
-      { case Seq(a, b) => graft.functions.SortedIntersectCountF(a, b)
-        case other => throw new IllegalArgumentException(
-          s"sorted_intersect_count_f requires exactly 2 arguments, " +
-            s"got ${other.length}") },
-      "scala_udf")
-    // SQL TABLE functions over the versioned table (snapshot / time
-    // travel / change feed) — same builders as the extensions path
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_table", graft.GraftExtensions.graftTableBuilder, "scala_udf")
-    spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-      "graft_table_changes",
-      graft.GraftExtensions.graftTableChangesBuilder, "scala_udf")
-    // SQL MERGE INTO over the named catalog (round 15): the planner
-    // strategy, injected idempotently so sessions built without
-    // spark.sql.extensions get the statement too
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies
-        .contains(graft.plans.GraftMergeStrategy))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ graft.plans.GraftMergeStrategy
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "scala_udf")
+    }
+    GraftExtensions.tableFunctions.foreach { case (name, build) =>
+      spark.sessionState.tableFunctionRegistry
+        .createOrReplaceTempFunction(name, build, "scala_udf")
+    }
+    GraftExtensions.strategies.foreach(withStrategy(spark, _))
   }
+
+  /** Adds `st` to the session's extra strategies unless it is there
+    * already, so sessions built without `spark.sql.extensions` plan the
+    * native operators too. */
+  private def withStrategy(spark: SparkSession,
+      st: SparkStrategy): classic.SparkSession = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    if (!cs.experimental.extraStrategies.contains(st))
+      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ st
+    cs
+  }
+
+  /** `p`'s column `n`, or an error naming the operator (and side). */
+  private def attr(op: String, p: LogicalPlan, n: String,
+      side: String = "") = {
+    val where = if (side.isEmpty) "" else s"on the $side side "
+    p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+      s"$op: no column '$n' $where" +
+        s"(have ${p.output.map(_.name).mkString(", ")})"))
+  }
+
+  /** Self-join hygiene: when both inputs descend from the same base
+    * relation their attributes share exprIds, and a binary node with
+    * duplicate ids across children is ambiguous (the analyzer's
+    * DeduplicateRelations never sees a custom node) — so the right side
+    * is re-aliased into fresh ids unconditionally. */
+  private def freshIds(p: LogicalPlan): LogicalPlan =
+    Project(p.output.map(a => Alias(a, a.name)()), p)
 
   /** Backward as-of join through the native operator
     * ([[graft.plans.AsOfJoinExec]]): every `left` row gains `right`'s
@@ -63,27 +68,13 @@ object GraftFunctions {
   def asofJoin(left: DataFrame, right: DataFrame,
       leftKey: String, leftTs: String,
       rightKey: String, rightTs: String): DataFrame = {
-    val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    val spark = withStrategy(left.sparkSession, AsOfJoinStrategy)
     val lp = left.queryExecution.analyzed
-    val rp0 = right.queryExecution.analyzed
-    // self-join hygiene: when both inputs descend from the same base
-    // relation their attributes share exprIds, and a binary node with
-    // duplicate ids across children is ambiguous (the analyzer's
-    // DeduplicateRelations never sees this custom node) — re-alias the
-    // right side into fresh ids unconditionally
-    val rp: LogicalPlan =
-      Project(rp0.output.map(a => Alias(a, a.name)()), rp0)
-    def attr(p: LogicalPlan, n: String, side: String) =
-      p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"asofJoin: no column '$n' on the $side side " +
-          s"(have ${p.output.map(_.name).mkString(", ")})"))
+    val rp = freshIds(right.queryExecution.analyzed)
+    def l(n: String) = attr("asofJoin", lp, n, "left")
+    def r(n: String) = attr("asofJoin", rp, n, "right")
     classic.Dataset.ofRows(spark, AsOfJoinPlan(lp, rp,
-      attr(lp, leftKey, "left"), attr(lp, leftTs, "left"),
-      attr(rp, rightKey, "right"), attr(rp, rightTs, "right")))
+      l(leftKey), l(leftTs), r(rightKey), r(rightTs)))
   }
 
   /** FORWARD as-of join: every `left` row gains `right`'s columns from
@@ -152,11 +143,7 @@ object GraftFunctions {
     require(loFactor >= 0 && hiFactor >= loFactor && binWidth > 0,
       s"bandJoin requires 0 <= loFactor <= hiFactor and binWidth > 0; " +
         s"got ($loFactor, $hiFactor, $binWidth)")
-    val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(BandJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ BandJoinStrategy
-    }
+    val spark = withStrategy(left.sparkSession, BandJoinStrategy)
     import org.apache.spark.sql.functions.{col, explode, floor, sequence}
     val lBin = "__graft_band_bin_l"
     val rBin = "__graft_band_bin_r"
@@ -166,17 +153,11 @@ object GraftFunctions {
     val rExp = right.withColumn(rBin,
       floor(col(rightVal) / binWidth).cast("long"))
     val lp = lExp.queryExecution.analyzed
-    val rp0 = rExp.queryExecution.analyzed
-    // self-join hygiene (see asofJoin): fresh exprIds on the right
-    val rp: LogicalPlan =
-      Project(rp0.output.map(a => Alias(a, a.name)()), rp0)
-    def attr(p: LogicalPlan, n: String, side: String) =
-      p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"bandJoin: no column '$n' on the $side side " +
-          s"(have ${p.output.map(_.name).mkString(", ")})"))
+    val rp = freshIds(rExp.queryExecution.analyzed)
+    def l(n: String) = attr("bandJoin", lp, n, "left")
+    def r(n: String) = attr("bandJoin", rp, n, "right")
     classic.Dataset.ofRows(spark, BandJoinPlan(lp, rp,
-      attr(lp, lBin, "left"), attr(lp, leftVal, "left"),
-      attr(rp, rBin, "right"), attr(rp, rightVal, "right"),
+      l(lBin), l(leftVal), r(rBin), r(rightVal),
       loFactor, hiFactor, loOffset, hiOffset))
       .drop(lBin, rBin)
   }
@@ -191,20 +172,13 @@ object GraftFunctions {
     * streamed pass. */
   def sessionize(df: DataFrame, key: String, ts: String, tie: String,
       gapMicros: Long, outCol: String = "session_idx"): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
-    if (!spark.experimental.extraStrategies.contains(SessionizeStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SessionizeStrategy
-    }
+    val spark = withStrategy(df.sparkSession, SessionizeStrategy)
     val p = df.queryExecution.analyzed
-    def attr(n: String) =
-      p.output.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"sessionize: no column '$n' " +
-          s"(have ${p.output.map(_.name).mkString(", ")})"))
+    def c(n: String) = attr("sessionize", p, n)
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.types.LongType
     classic.Dataset.ofRows(spark, SessionizePlan(p,
-      attr(key), attr(ts), attr(tie), gapMicros,
+      c(key), c(ts), c(tie), gapMicros,
       AttributeReference(outCol, LongType, nullable = false)()))
   }
 }

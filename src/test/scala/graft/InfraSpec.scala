@@ -38,6 +38,41 @@ class InfraSpec extends SparkSpec {
       Seq("q_a" -> 1.0), "/x", Seq(0.1), healed = 1, firstPassTotal = 2.5)
     assert(om.readTree(t2).get("value_first_pass").asDouble() === 2.5)
     assert(om.readTree(t2).get("healed").asInt() === 1)
+    assert(t.get("n_failed").asInt() === 0)
+    assert(t.get("failed").size() === 0)
+    // a query that threw is named, never timed: it adds nothing to
+    // value, value_first_pass or the per-query map
+    val (m3, t3) = Bench.renderLines(Seq("q_a" -> 1.0), "/x",
+      firstPassTotal = 1.5, failed = Seq("q_boom"))
+    val tot3 = om.readTree(t3)
+    assert(tot3.get("n_failed").asInt() === 1)
+    assert(tot3.get("failed").get(0).asText() === "q_boom")
+    assert(tot3.get("value").asDouble() === 1.0)
+    assert(tot3.get("value_first_pass").asDouble() === 1.5)
+    assert(tot3.get("n_queries").asInt() === 1)
+    assert(!om.readTree(m3).get("queries").has("q_boom"))
+  }
+
+  test("the test session is Sessions.local(4) without DotProductRewrite") {
+    val conf = spark.sparkContext.getConf
+    assert(spark.sparkContext.master === "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(conf.get("spark.ui.enabled") === "false")
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(!conf.contains("spark.sql.extensions"))
+    // the composed HOF reference stays composed: nothing rewrites it
+    // into the native expression it is compared against (a test that
+    // wants the rule adds it, as OperatorGoldenSpec does)
+    assert(!spark.experimental.extraOptimizations
+      .contains(graft.plans.DotProductRewrite))
+    val hof = Tables.t(spark, sf, "embeddings").limit(5).select(aggregate(
+      zip_with($"embedding", $"embedding",
+        (a, b) => a.cast("double") * b.cast("double")),
+      lit(0.0), (acc, v) => acc + v).as("d"))
+    val optimized = hof.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("aggregate") &&
+      !optimized.contains("dot_product_f"), optimized)
   }
 
   test("versioned table: snapshot isolation, time travel, atomic manifests") {

@@ -675,4 +675,50 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty,
       offenders.map { case (k, v) => s"$k: $v" }.mkString("\n"))
   }
+
+
+  test("NSW build: topM runs on two exchanges; the vec_id spread is not reused") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+      ShuffleExchangeExec}
+    // the graph build checkpoints eagerly inside the operator call, so
+    // its plans are caught as they run
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    graft.ops.OpCache.clear(spark) // forget a graph an earlier test built
+    spark.listenerManager.register(l)
+    try {
+      SparkEntry.queries("q_sim_hnsw_topk")(spark, sf)
+      org.apache.spark.graft.QueryMeter.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    object H extends AdaptiveSparkPlanHelper
+    def keys(e: SparkPlan): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
+    }
+    def count(p: SparkPlan, k: String*): Int =
+      H.collect(p) { case e: ShuffleExchangeExec if keys(e) == k => e }.size
+    val builds = plans.toArray(Array.empty[SparkPlan])
+      .filter(count(_, "src", "dst") > 0)
+    assert(builds.length === 4, "the seed graph + three NN-descent rounds")
+    builds.foreach { p =>
+      assert((count(p, "src", "dst"), count(p, "src")) === ((1, 1)),
+        s"topM: one groupBy-min exchange, one window exchange:\n$p")
+    }
+    val seed = builds.filter(count(_, "vec_id") > 0)
+    assert(seed.length === 1)
+    assert(count(seed.head, "vec_id") === 2,
+      s"one vec_id spread per self-join branch:\n${seed.head}")
+    assert(H.collect(seed.head) {
+      case r: ReusedExchangeExec if keys(r.child) == Seq("vec_id") => r
+    }.isEmpty, "the branches' vec_id spreads differ, so none is reused")
+  }
 }

@@ -22,16 +22,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Fixed 4 cores whatever the machine. No GraftExtensions: the
+    * golden specs compare native expressions against composed HOF
+    * references, which `DotProductRewrite` would rewrite away. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts legacy nanos flag — session-build home (see Tables.t)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Sessions.local(4, extensions = false)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -12,7 +12,6 @@ SFDIR="${1:-/root/testdata/sf0.1}"
 OUT="${2:-CORRECTNESS_sf.json}"
 TMP="$(mktemp -d /tmp/graft_verify_sf.XXXXXX)"
 trap 'rm -rf "$TMP"' EXIT
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  sbt -batch "runMain graft.Verify $SFDIR $TMP" >/dev/null
+sbt -batch "runMain graft.Verify $SFDIR $TMP" >/dev/null
 CHECK_JSON_OUT="$OUT" python3 tools/check.py "$SFDIR" "$TMP"
 echo "wrote $OUT"
